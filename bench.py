@@ -825,8 +825,10 @@ def main() -> None:
             # CacheManager-served. A query's OWN warm-run caches still
             # serve its min-of-3 (unchanged semantics — such queries
             # are flagged cache_fronted and the regression contract
-            # compares their cold runs). BENCH_BASELINE.json was
-            # re-pinned under this policy in the same commit.
+            # compares their cold runs). BENCH_BASELINE.json was NOT
+            # re-pinned under this policy: its cold runs were frozen
+            # at r13 without clearCache(), so the regression contract
+            # compares cleared-cache cold runs against uncleared ones.
             spark.catalog.clearCache()
             # The warm-up run is also the COLD number: for operators
             # that .cache() (semdedup, the iterative graph family,

@@ -67,6 +67,30 @@ def _warehouse_dir() -> str:
     return _WAREHOUSE_DIR
 
 
+# local[N] puts the driver and all N executor threads in ONE JVM, so
+# spark.driver.memory is the heap of the whole local engine. The default
+# is a quarter of physical memory (32g on a 128 GiB host, where an 8g
+# heap across 32 concurrent tasks caused multi-second GC pauses late in
+# long query batteries), capped at 32g and never below Spark's own 1g
+# default: a heap allowed to grow past physical memory gets the JVM
+# killed by the OS on small hosts. SPARK_DRIVER_MEMORY, when set and
+# non-empty, wins; a real cluster sizes executor memory separately.
+_DRIVER_MEMORY_CAP_MB = 32 * 1024
+_DRIVER_MEMORY_FLOOR_MB = 1024
+
+
+def driver_memory() -> str:
+    """spark.driver.memory for get_spark: $SPARK_DRIVER_MEMORY if set and
+    non-empty, else a quarter of physical memory within [1g, 32g]."""
+    explicit = os.environ.get("SPARK_DRIVER_MEMORY")
+    if explicit:
+        return explicit
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = phys // 4 // (1024 * 1024)
+    mb = max(_DRIVER_MEMORY_FLOOR_MB, min(_DRIVER_MEMORY_CAP_MB, mb))
+    return f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
+
+
 def get_spark(
     app_name: str = "cgtcalc-data-transformer-spark",
     master: str | None = None,
@@ -94,13 +118,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local[N] puts driver + all N executor threads in ONE JVM; an
-        # 8g heap across 32 concurrent tasks forces multi-second GC
-        # pauses late in long query batteries (observed as 5-10x
-        # outliers on otherwise sub-second queries). 32g on the 128 GiB
-        # box keeps old-gen churn off the critical path; a real cluster
-        # sizes executor memory separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

@@ -278,10 +278,15 @@ def _const_partitioned_windows(df) -> bool:
     partition key is a foldable literal, so the runtime partitioning
     is SinglePartition exactly like an empty spec.
 
-    The check reads the logical plan as JSON rather than the formatted
+    The check reads the logical plan rather than the formatted
     physical text: Catalyst constant-folds a literal partition key
     OUT of the printed Window arguments entirely, so no text pattern
-    can see it (the r4 loophole)."""
+    can see it (the r4 loophole). It walks the plan's nodes through
+    children() and serialises only each window's partition-spec
+    expressions to JSON, never the whole plan: TreeNode.toJSON writes
+    a CaseWhen's elseValue in full on top of its child index, so a
+    whole plan with nested when/otherwise chains serialises to
+    hundreds of MB and exhausts the driver heap."""
     import json
 
     def _has_attr(expr: dict) -> bool:
@@ -295,17 +300,21 @@ def _const_partitioned_windows(df) -> bool:
             if isinstance(child, dict)
         )
 
-    nodes = json.loads(df._jdf.queryExecution().analyzed().toJSON())
-    for node in nodes:
-        cls = node.get("class", "")
+    def _seq(seq) -> list:
+        return [seq.apply(i) for i in range(seq.size())]
+
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        stack.extend(_seq(node.children()))
+        cls = node.getClass().getName()
         if not (cls.endswith(".Window") or cls.endswith(".WindowGroupLimit")):
             continue
-        spec = node.get("partitionSpec") or []
-        # toJSON nests each expression tree as a list of dicts
+        # toJSON flattens each expression tree into a list of dicts
         exprs = [
             e
-            for entry in spec
-            for e in (entry if isinstance(entry, list) else [entry])
+            for expr in _seq(node.partitionSpec())
+            for e in json.loads(expr.toJSON())
             if isinstance(e, dict)
         ]
         if exprs and not any(_has_attr(e) for e in exprs):
