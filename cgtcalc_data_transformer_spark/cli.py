@@ -11,27 +11,32 @@ sort chronologically (stable: existing before new), rewrite, print
 the count summary and a 5-line sample (`index.js:124-130`). ``--dedup``
 enables the exact dedup the reference's comment intends but never
 implements (`index.js:110`).
+
+A single-file conversion is one Spark job: it reads both inputs,
+parses, merges, sorts, writes and counts. The sample is read back
+from the written file. ``--partitioned`` range-partitions the sort,
+which adds a sampling job and a shuffle.
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
 import os
-import shutil
 import sys
-import tempfile
+
+from pyspark.sql import Observation
 
 from cgtcalc_data_transformer_spark import schemas
 from cgtcalc_data_transformer_spark.operators import bullionvault, fidelity, freetrade, ii
-from cgtcalc_data_transformer_spark.operators.pipeline import merge_sorted, report
+from cgtcalc_data_transformer_spark.operators.pipeline import merge_sorted
 from cgtcalc_data_transformer_spark.session import get_spark
 from cgtcalc_data_transformer_spark.sources import (
+    head_lines,
     read_eml_dir,
     read_existing_output,
     read_header_csv,
     read_preamble_csv,
-    write_output,
+    replace_output,
 )
 
 SOURCE_TYPES = ["freetrade", "ii", "fidelity", "bullionvault"]
@@ -62,31 +67,33 @@ def run_pipeline(
     output → chronological sort → rewrite. Mirrors the reference's
     main() body (`/root/reference/index.js:79-122`); factored out of
     ``main`` so tests can replay multi-invocation sequences against
-    one SparkSession (each real CLI run owns its session)."""
-    new_lines = parse_source(spark, source_type, path)
-    existing = (
-        read_existing_output(spark, output) if os.path.exists(output) else None
+    one SparkSession (each real CLI run owns its session).
+
+    The write job also counts the rows written and the new ones
+    (``merge_sorted``'s observation), and the sample is read from the
+    written output, so nothing is computed twice: in single-file mode
+    the whole conversion is that one job. The job is described by
+    the source type and the layers it runs.
+    """
+    sc = spark.sparkContext
+    prev_description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(
+        f"cgtcalc {source_type}: sources, parsers.{source_type}, "
+        "pipeline.merge_sorted, sink.replace_output"
     )
-    merged = merge_sorted(existing, new_lines, dedup=dedup)
-
-    if partitioned:
-        write_output(merged, output, partitioned=True)
-        return report(merged, new_count=new_lines.count())
-
-    # single-file mode: write to a temp dir, move the part file
-    # over the output path (byte-identical data.txt contract)
-    tmp = tempfile.mkdtemp(prefix="cgtcalc_out_")
     try:
-        write_output(merged, tmp, partitioned=False)
-        part = glob.glob(os.path.join(tmp, "part-*"))
-        rep = report(merged, new_count=new_lines.count())
-        if part:
-            shutil.move(part[0], output)
-        else:  # no rows
-            open(output, "w").close()
-        return rep
+        new_lines = parse_source(spark, source_type, path)
+        existing = (
+            read_existing_output(spark, output) if os.path.exists(output) else None
+        )
+        counts = Observation()
+        merged = merge_sorted(
+            existing, new_lines, dedup=dedup, partitioned=partitioned, observation=counts
+        )
+        replace_output(merged, output, partitioned=partitioned)
+        return {**counts.get, "sample": head_lines(output, 5)}
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        sc.setJobDescription(prev_description)
 
 
 def main(argv: list[str] | None = None) -> int:

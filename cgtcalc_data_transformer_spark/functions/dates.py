@@ -35,10 +35,13 @@ _MONTHS = {
 
 def _month_num(word: Column) -> Column:
     """Month-name column → zero-padded month-number string (or NULL)."""
+    # One flat CASE WHEN: nested when(...).otherwise(when(...)) doubles
+    # the plan's JSON size per level.
     key = F.substring(F.lower(word), 1, 3)
-    expr = F.lit(None).cast("string")
-    for k, v in _MONTHS.items():
-        expr = F.when(key == k, F.lit(v)).otherwise(expr)
+    (k0, v0), *rest = _MONTHS.items()
+    expr = F.when(key == k0, F.lit(v0))
+    for k, v in rest:
+        expr = expr.when(key == k, F.lit(v))
     return expr
 
 

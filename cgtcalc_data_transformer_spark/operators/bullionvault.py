@@ -41,17 +41,30 @@ def _num(c: Column) -> Column:
 def canonical(raw: DataFrame) -> DataFrame:
     """raw: DataFrame[file_name, text] → DataFrame[TRANSACTION]."""
     text = F.col("text")
-    src = F.col("file_name")
+    # Extract first, check second. Each check names its value twice
+    # (condition and result); inlined, that repeats the regex and date
+    # trees until the stage's generated code passes the JVM's 64 KB
+    # method limit and Spark falls back from whole-stage codegen.
+    # CollapseProject does not merge a projection whose expensive
+    # outputs are used more than once into the next, so they stay two.
+    extracted = raw.select(
+        F.col("file_name"),
+        F.regexp_extract(text, SUMMARY_RE, 1).alias("kind_raw"),
+        _num(F.regexp_extract(text, SUMMARY_RE, 2)).alias("qty"),
+        _num(F.regexp_extract(text, SUMMARY_RE, 3)).alias("price"),
+        F.upper(F.regexp_extract(text, CONSIDERATION_RE, 1)).alias("cons_cur"),
+        F.upper(F.regexp_extract(text, COMMISSION_RE, 1)).alias("comm_cur"),
+        _num(F.regexp_extract(text, COMMISSION_RE, 2)).alias("commission"),
+        F.regexp_extract(text, SECURITY_RE, 1).alias("security"),
+        ddmmyyyy_from_freeform_dealtime(
+            F.trim(F.regexp_extract(text, DEALTIME_RE, 1))
+        ).alias("date"),
+    )
 
-    kind_raw = F.regexp_extract(text, SUMMARY_RE, 1)
-    qty = _num(F.regexp_extract(text, SUMMARY_RE, 2))
-    price = _num(F.regexp_extract(text, SUMMARY_RE, 3))
-    cons_cur = F.upper(F.regexp_extract(text, CONSIDERATION_RE, 1))
-    comm_cur = F.upper(F.regexp_extract(text, COMMISSION_RE, 1))
-    commission = _num(F.regexp_extract(text, COMMISSION_RE, 2))
-    security = F.regexp_extract(text, SECURITY_RE, 1)
-    dealtime = F.trim(F.regexp_extract(text, DEALTIME_RE, 1))
-    date = ddmmyyyy_from_freeform_dealtime(dealtime)
+    src = F.col("file_name")
+    kind_raw, qty, price = F.col("kind_raw"), F.col("qty"), F.col("price")
+    cons_cur, comm_cur = F.col("cons_cur"), F.col("comm_cur")
+    commission, security, date = F.col("commission"), F.col("security"), F.col("date")
 
     gbp_ok = ((cons_cur == "") | (cons_cur == "GBP")) & (
         (comm_cur == "") | (comm_cur == "GBP")
@@ -72,7 +85,7 @@ def canonical(raw: DataFrame) -> DataFrame:
         F.concat(F.lit("Unsupported currency in "), src, F.lit(" — only GBP allowed")),
     )
 
-    return raw.select(
+    return extracted.select(
         checked_kind.alias("kind"),
         require(
             date.isNotNull(),

@@ -6,7 +6,9 @@ from cgtcalc_data_transformer_spark.sources.csv import (
 from cgtcalc_data_transformer_spark.sources.eml import read_eml_dir, df_from_email_strings
 from cgtcalc_data_transformer_spark.sources.tpch import load_table, load_tables, load_events
 from cgtcalc_data_transformer_spark.sources.text_output import (
+    head_lines,
     read_existing_output,
+    replace_output,
     write_output,
 )
 
@@ -21,4 +23,6 @@ __all__ = [
     "load_events",
     "read_existing_output",
     "write_output",
+    "replace_output",
+    "head_lines",
 ]

@@ -19,15 +19,14 @@ def read_eml_dir(spark: SparkSession, path: str) -> DataFrame:
     """One row per .eml file: (file_name, text)."""
     # NOTE: must be the `wholetext=` kwarg — the string option key is
     # silently ignored by DataFrameReader.text and yields per-line rows.
-    df = (
-        spark.read.text(path + "/*.eml", wholetext=True)
-        .select(
-            F.input_file_name().alias("file_name"),
-            F.col("value").alias("text"),
-        )
+    # The glob filter matches the extension case-insensitively, like
+    # index.js:69-71.
+    return spark.read.text(
+        path, wholetext=True, pathGlobFilter="*.[eE][mM][lL]"
+    ).select(
+        F.input_file_name().alias("file_name"),
+        F.col("value").alias("text"),
     )
-    # case-insensitive .eml filter, matching index.js:69-71
-    return df.filter(F.lower("file_name").endswith(".eml"))
 
 
 def df_from_email_strings(spark: SparkSession, emails: list[str]) -> DataFrame:

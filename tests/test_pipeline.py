@@ -58,35 +58,36 @@ def test_report(spark):
     assert len(rep["sample"]) == 5
 
 
-def test_tag_probe_does_not_poison_pyspark_logger(spark):
-    """Regression for VERDICT r9 #1: merge_sorted's _metadata probe
-    muted `DataFrameQueryContextLogger` via stdlib logging.getLogger,
-    which CREATES a plain logging.Logger and caches it by name.
-    PySpark 4's captured-error path later fetches the same name
-    expecting its PySparkLogger subclass (whose .exception accepts a
-    `file=` kwarg) and crashed with
+def test_pipeline_does_not_poison_pyspark_logger(spark, tmp_path):
+    """Regression for VERDICT r9 #1: stdlib ``logging.getLogger`` on
+    `DataFrameQueryContextLogger` CREATES a plain logging.Logger and
+    caches it by name. PySpark 4's captured-error path later fetches
+    the same name expecting its PySparkLogger subclass (whose
+    .exception accepts a `file=` kwarg) and crashed with
     `TypeError: Logger._log() got an unexpected keyword argument 'file'`,
-    masking the real Spark exception process-wide. After any pipeline
-    run, a post-pipeline ANSI error must still surface as the real
-    Spark exception, not the TypeError."""
+    masking the real Spark exception process-wide. After a pipeline
+    run no plain Logger may be cached under that name, and a later
+    ANSI error must still surface as the real Spark exception."""
     import logging
 
-    from pyspark.logger import PySparkLogger
+    import pytest
     from pyspark.sql import functions as F
 
-    # 1. Run the pipeline (in-memory source exercises the probe's
-    #    failure branch — the one that touches the logger).
-    merge_sorted(None, _lines_df(spark, ["BUY 01/01/2024 A 1 1 0"])).collect()
+    from cgtcalc_data_transformer_spark import fixtures
+    from cgtcalc_data_transformer_spark.cli import run_pipeline
 
-    # 2. The cached logger must still be PySpark's subclass.
-    assert isinstance(
-        logging.getLogger("DataFrameQueryContextLogger"), PySparkLogger
-    )
+    # 1. Run a whole conversion.
+    (tmp_path / "ii.csv").write_text(fixtures.II_CSV)
+    run_pipeline(spark, "ii", str(tmp_path / "ii.csv"), output=str(tmp_path / "data.txt"))
+
+    # 2. No plain Logger cached under PySpark's name (only ever its
+    #    subclass, or nothing yet). Reads the registry without
+    #    creating an entry, which getLogger would do.
+    cached = logging.Logger.manager.loggerDict.get("DataFrameQueryContextLogger")
+    assert type(cached) is not logging.Logger
 
     # 3. A post-pipeline ANSI overflow surfaces as the Spark error,
     #    with its real message — not a masking TypeError.
-    import pytest
-
     df = spark.createDataFrame([(2**62,), (2**62,)], "x long")
     with pytest.raises(Exception, match="(?i)overflow|out of range") as ei:
         df.agg(F.sum(F.col("x") + F.col("x"))).collect()
