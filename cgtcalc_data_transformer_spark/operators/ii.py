@@ -3,7 +3,7 @@
 Reference semantics (`/root/reference/ii.js`):
 - rows whose ``Quantity`` fails JS ``Number()`` are skipped (fee /
   interest rows with ``n/a``; note ``Number('') === 0`` so an empty
-  quantity is NOT skipped — `ii.js:46`);
+  quantity is NOT skipped but read as 0 — `ii.js:46`);
 - kind strictly from Debit/Credit numeric-ness after ``£,`` strip:
   debit-only → BUY, credit-only → SELL, anything else is an error
   (`ii.js:64-71`);
@@ -14,6 +14,10 @@ Reference semantics (`/root/reference/ii.js`):
   export (`ii.js:77-78`);
 - price = ``Number`` of ``£,``-stripped Price; missing → error
   (`ii.js:80-86`); expenses always 0 (`ii.js:88`).
+
+Empty cells arrive as ``''``, never null, on every path (the CSV
+reader's rule 2, ``sources/csv.py``), so the ``''`` rules above hold:
+an empty Quantity is 0, an empty Debit or Credit counts as numeric.
 
 Pure filter+project column expressions; no UDFs, no shuffle.
 """

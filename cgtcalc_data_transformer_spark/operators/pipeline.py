@@ -18,7 +18,8 @@ the range-partitioned ``orderBy``, so the part files are globally
 ordered without a single-node bottleneck.
 
 ``dedup=True`` implements the intent the reference comments but never
-ships: exact line-level dedup before the sort.
+ships: exact line-level dedup before the sort (in single-file mode
+inside the same one partition, so the conversion stays one job).
 """
 
 from __future__ import annotations
@@ -76,6 +77,10 @@ def merge_sorted(
     if dedup:
         # The `index.js:110` comment's stated intent: exact dedup.
         # Keep the earliest (existing-first) occurrence of each line.
+        # Single-file output is one partition anyway; coalescing first
+        # lets the groupBy run in it with no exchange, so no extra job.
+        if not partitioned:
+            merged = merged.coalesce(1)
         merged = (
             merged.groupBy("line")
             .agg(

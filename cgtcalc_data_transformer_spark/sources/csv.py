@@ -1,135 +1,114 @@
-"""CSV sources.
+"""CSV sources: one reader, one grammar.
 
-Three readers mirroring the reference's three CSV ingestion modes
-(SURVEY.md §2 S4-S6), all schema-declared and distributed:
+Every broker CSV goes through ``_parse``, whichever entry point reads
+it (SURVEY.md §2 S4-S6). The reference does the same: csv-parse with
+header columns for Freetrade and ii, and with ``from_line: 9`` for
+Fidelity (`/root/reference/freetrade.js:90-96`,
+`/root/reference/ii.js:30-52`, `/root/reference/fidelity.js:31-52`).
 
-- ``read_header_csv``: header-validated lenient CSV (Freetrade / ii)
-  ↔ csv-parse ``columns:true, trim, relax_*`` options
-  (`/root/reference/freetrade.js:90-96`, `/root/reference/ii.js:30-52`).
-  Spark's CSV reader handles BOM and PERMISSIVE recovery natively; we
-  additionally strip the zero-width characters the ii export leads
-  with (`/root/reference/ii.js:34`).
-- ``read_preamble_csv``: fixed 12-column read that skips an 8-line
-  junk preamble per file (`/root/reference/fidelity.js:31-52`,
-  ``from_line: 9``). Spark CSV has no skip-N-rows, so we read
-  ``wholetext`` (one row per file) and derive per-file line numbers
-  with ``posexplode`` — correct by construction under any scan
-  partitioning, no shuffle, parallel across files.
-- ``df_from_csv_string``: test/driver convenience — parallelize an
-  in-memory CSV string through the same parse path the file readers
-  use, so golden tests exercise production code.
+- ``read_header_csv``: a header file (Freetrade / ii).
+- ``read_preamble_csv``: a header-less file whose first
+  ``skip_lines`` lines are skipped (Fidelity's 8-line preamble).
+- ``df_from_csv_string``: the same two shapes over an in-memory
+  string, so golden tests and the registry's ``parse_*`` queries run
+  the production grammar.
+
+The files are read ``wholetext`` (one row per file, parallel across
+files) and split into lines numbered per file with ``posexplode``:
+the numbers are right however the scan is partitioned, with no
+shuffle. The per-file memory bound is the file size; broker exports
+are MBs, and at scale the corpus is many files, the axis this
+parallelises over. Each line is then parsed whole by one
+``F.from_csv`` call with the schema's DDL.
+
+The grammar's four rules are decided here, not in the parsers:
+
+1. Quotes escape RFC 4180 style (``""`` inside a quoted cell), as in
+   csv-parse and Python's ``csv``: ``escape='"'``. Spark's default
+   ``\\`` escape leaves ``""`` raw and lets a cell ending in a
+   backslash swallow the rest of its row.
+2. An empty cell reads as ``''``, never null, so JS rules such as
+   ``Number('') === 0`` hold (`/root/reference/ii.js:46`). No
+   ``from_csv`` option does this (``nullValue``/``emptyValue`` still
+   give null for an unquoted empty cell), so one ``selectExpr``
+   coalesces every column.
+3. Zero-width characters (BOM, ZWSP, LRM, RLM) are stripped only
+   where they lead a file (`/root/reference/ii.js:34`).
+4. A header file's first non-blank line must name every declared
+   column, in order; otherwise the read fails fast naming the
+   expected and the found header. The check is one filter in the
+   plan. Spark's own ``CSVHeaderChecker`` is not used: it cannot see a
+   zero-width character leading the header, and under column pruning
+   it checks only the columns the parser reads. Fidelity stays
+   header-less, as in the reference: its line-9 header (and any
+   repeat of it) is dropped by the parser's type whitelist.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from cgtcalc_data_transformer_spark.schemas import FIDELITY_COLUMNS
+from cgtcalc_data_transformer_spark.schemas import FIDELITY_RAW
 
-# Zero-width / BOM codepoints the ii export may lead with
-# (`/root/reference/ii.js:34`): BOM, ZWSP, LRM, RLM.
-_ZERO_WIDTH = "[﻿​‎‏]"
+# Rule 1, plus csv-parse's ``trim`` (`/root/reference/freetrade.js:93`).
+_OPTIONS = {
+    "escape": '"',
+    "ignoreLeadingWhiteSpace": "true",
+    "ignoreTrailingWhiteSpace": "true",
+}
 
 
-def _csv_options() -> dict[str, str]:
-    return {
-        "header": "true",
-        "mode": "PERMISSIVE",
-        "ignoreLeadingWhiteSpace": "true",
-        "ignoreTrailingWhiteSpace": "true",
-        "enforceSchema": "false",
-    }
+def _parse(files: DataFrame, schema: StructType, skip_lines: int, header: bool) -> DataFrame:
+    """``files``: one row per file, its text in ``value``. Returns one
+    row per data line with the schema's columns, all strings."""
+    names = schema.fieldNames()
+    # Rule 3, then drop the preamble and blank lines before numbering,
+    # so in a header file line 0 is the header.
+    lines = F.expr(
+        "filter(split(regexp_replace(value, '^[\\uFEFF\\u200B\\u200E\\u200F]+', ''), '\\r?\\n'), "
+        f"(line, i) -> i >= {int(skip_lines)} AND trim(line) != '')"
+    )
+    ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
+    parsed = files.select(F.posexplode(lines).alias("_line_no", "value")).select(
+        "_line_no", "value", F.from_csv("value", ddl, _OPTIONS).alias("p")
+    )
+    if header:  # rule 4
+        expected = ",".join(names)
+        parsed = parsed.filter(
+            F.when(F.col("_line_no") > 0, True)
+            .when(F.to_csv("p") == expected, False)
+            .otherwise(F.raise_error(F.concat(
+                F.lit(f"CSV header does not match the declared columns. Expected: {expected}; found: "),
+                F.col("value"),
+            )))
+        )
+    return parsed.selectExpr(*[f"coalesce(p.`{n}`, '') AS `{n}`" for n in names])  # rule 2
 
 
 def read_header_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """Header CSV with declared schema; empty lines dropped by Spark."""
-    df = spark.read.options(**_csv_options()).schema(schema).csv(path)
-    first = schema.fieldNames()[0]
-    return df.withColumn(first, F.regexp_replace(F.col(first), _ZERO_WIDTH, ""))
+    """A header CSV file (or directory of them) with declared columns."""
+    return _parse(spark.read.text(path, wholetext=True), schema, 0, header=True)
 
 
-def _split_csv_line(line_col, ncols: int):
-    """Split one CSV line into `ncols` fields, honoring double quotes.
-
-    `from_csv` needs a struct literal schema; for the simple
-    quote/comma grammar these files use, a regex split outside quotes
-    is equivalent and stays in codegen: split on commas not inside
-    quotes, then strip surrounding quotes and collapse "" escapes.
-    """
-    parts = F.split(line_col, r',(?=(?:[^"]*"[^"]*")*[^"]*$)')
-    fields = []
-    for i in range(ncols):
-        raw = F.trim(F.get(parts, i))
-        unq = F.when(
-            raw.rlike('^".*"$'),
-            F.regexp_replace(F.regexp_replace(raw, '^"|"$', ""), '""', '"'),
-        ).otherwise(raw)
-        fields.append(unq)
-    return fields
-
-
-def read_preamble_csv(
-    spark: SparkSession,
-    path: str,
-    columns: list[str] | None = None,
-    skip_lines: int = 8,
-) -> DataFrame:
-    """Fixed-column CSV skipping a per-file preamble (Fidelity shape).
-
-    ``wholetext`` read (one row per file, parallel across files) →
-    split to lines with per-file positions via ``posexplode`` — line
-    numbers are correct by construction no matter how the scan is
-    partitioned (a plain line read + per-task counter miscounts when
-    one file spans partitions). The per-file memory bound is the file
-    size; broker exports are MBs, and at scale the corpus is many
-    files, which is exactly the axis this parallelizes over.
-    Repeated header lines inside the body are tolerated downstream
-    (the parser's whitelist filter drops them, matching the golden
-    case at `/root/reference/__tests__/data/fidelity.json:17-22`).
-    """
-    columns = columns or FIDELITY_COLUMNS
-    files = spark.read.text(path, wholetext=True)
-    numbered = files.select(
-        F.posexplode(F.split(F.col("value"), r"\r?\n")).alias("_line_no", "value")
-    )
-    body = numbered.filter(
-        (F.col("_line_no") >= skip_lines) & (F.trim("value") != "")
-    )
-    fields = _split_csv_line(F.col("value"), len(columns))
-    return body.select(
-        *[fld.alias(name) for name, fld in zip(columns, fields)]
-    )
+def read_preamble_csv(spark: SparkSession, path: str, skip_lines: int = 8) -> DataFrame:
+    """A header-less Fidelity CSV whose first ``skip_lines`` lines
+    are a preamble. Repeated header lines inside the body are left to
+    the parser's whitelist filter (the golden case at
+    `/root/reference/__tests__/data/fidelity.json:17-22`)."""
+    return _parse(spark.read.text(path, wholetext=True), FIDELITY_RAW, skip_lines, header=False)
 
 
 def df_from_csv_string(
-    spark: SparkSession,
-    content: str,
-    schema: StructType,
-    skip_lines: int = 0,
-    has_header: bool = True,
+    spark: SparkSession, content: str, schema: StructType, skip_lines: int = 0
 ) -> DataFrame:
-    """Parse an in-memory CSV string with the production line grammar.
-
-    Used by golden tests and the driver's fixture queries: the
-    reference tests feed raw strings to `parseToFormat`
+    """An in-memory CSV string, read like a file: with ``skip_lines``
+    as ``read_preamble_csv`` reads it, else as ``read_header_csv``
+    does. The reference tests feed raw strings to ``parseToFormat``
     (`/root/reference/__tests__/processor.test.js:20-31`); this is the
-    DataFrame equivalent.
-    """
-    raw = content.split("\n")[skip_lines:]
-    rows = [(ln,) for ln in raw if ln.strip() != ""]
-    names = schema.fieldNames()
-    if has_header and rows:
-        # Drop the leading header row; repeated headers mid-file are
-        # left for parser-level filters (fidelity golden case 3).
-        rows = rows[1:]
-    lines_df = spark.createDataFrame(
-        rows, StructType([StructField("value", StringType())])
-    )
-    fields = _split_csv_line(
-        F.regexp_replace(F.col("value"), _ZERO_WIDTH, ""), len(names)
-    )
-    return lines_df.select(*[f.alias(n) for n, f in zip(names, fields)])
+    DataFrame equivalent."""
+    files = spark.createDataFrame([(content,)], "value string")
+    return _parse(files, schema, skip_lines, header=skip_lines == 0)
 
 
 # -------------------------------------------------- quarantine reader

@@ -34,9 +34,7 @@ def _cases(name: str):
 
 def _csv_cases(spark, name, schema, parser, skip_lines=0):
     for case in _cases(name):
-        raw = df_from_csv_string(
-            spark, case["input"], schema, skip_lines=skip_lines, has_header=True
-        )
+        raw = df_from_csv_string(spark, case["input"], schema, skip_lines=skip_lines)
         got = [r.line for r in parser.lines(raw).collect()]
         assert sorted(got) == sorted(case["expected"]), case["name"]
 
@@ -54,11 +52,10 @@ def test_fidelity_golden(spark):
     for case in _cases("fidelity"):
         lines = case["input"].split("\n")
         first_content = next(i for i, ln in enumerate(lines) if ln.strip())
+        # read header-less, as read_preamble_csv reads a file: the
+        # header line is the last line skipped
         raw = df_from_csv_string(
-            spark,
-            "\n".join(lines[first_content:]),
-            schemas.FIDELITY_RAW,
-            has_header=True,
+            spark, "\n".join(lines[first_content:]), schemas.FIDELITY_RAW, skip_lines=1
         )
         # repeated header rows survive df_from_csv_string; the
         # whitelist filter must drop them (golden case 3)

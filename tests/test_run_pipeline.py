@@ -43,11 +43,12 @@ def _written(path):
     return open(path).read().splitlines()
 
 
-def test_single_file_conversion_is_one_spark_job(spark, ii_csv, tmp_path):
+@pytest.mark.parametrize("dedup", [False, True])
+def test_single_file_conversion_is_one_spark_job(spark, ii_csv, tmp_path, dedup):
     out = str(tmp_path / "data.txt")
     (tmp_path / "data.txt").write_text("BUY 02/01/2023 SEED 1 2.5 0\n")
     rep, descriptions = _jobs(
-        spark, "one-job", lambda: run_pipeline(spark, "ii", ii_csv, output=out)
+        spark, f"one-job-{dedup}", lambda: run_pipeline(spark, "ii", ii_csv, output=out, dedup=dedup)
     )
     assert len(descriptions) == 1, descriptions
     assert "ii" in descriptions[0] and "merge_sorted" in descriptions[0]

@@ -1,17 +1,12 @@
-"""Source/sink round-trips: JSONL with declared schema, partitioned
-parquet events sink with partition pruning."""
+"""Source/sink round-trips: JSONL with declared schema, ORC, and the
+CSV quarantine reader."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cgtcalc_data_transformer_spark.plans import formatted_plan
 from cgtcalc_data_transformer_spark.schemas import TPCH_SCHEMAS
-from cgtcalc_data_transformer_spark.sources.json import (
-    read_jsonl,
-    write_events_partitioned,
-    write_jsonl,
-)
+from cgtcalc_data_transformer_spark.sources.jsonl import read_jsonl, write_jsonl
 from cgtcalc_data_transformer_spark.sources.tpch import load_events
 
 SF = "/root/testdata/sf0.001"
@@ -30,18 +25,6 @@ def test_jsonl_roundtrip(spark, tmp_path):
     a = ev.agg(*sums).collect()[0]
     b = back.agg(*sums).collect()[0]
     assert tuple(a) == tuple(b)
-
-
-def test_partitioned_events_sink_prunes(spark, tmp_path):
-    ev = load_events(spark, SF)
-    path = str(tmp_path / "events_by_day")
-    write_events_partitioned(ev, path)
-    back = spark.read.parquet(path)
-    one_day = back.filter(F.col("event_date") == "2024-01-02")
-    assert one_day.count() > 0
-    plan = formatted_plan(one_day)
-    # partition filter must prune at the scan, not post-filter
-    assert "PartitionFilters" in plan and "event_date" in plan.split("PartitionFilters")[1][:200]
 
 
 def test_orc_roundtrip_preserves_content(spark, tmp_path):
